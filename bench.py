@@ -21,7 +21,14 @@ from hebrew_tutor_data_pipeline_spark.plans import (  # noqa: E402
     CATALOG,
     REGISTRATION_ORDER,
 )
-from hebrew_tutor_data_pipeline_spark.session import get_spark  # noqa: E402
+from hebrew_tutor_data_pipeline_spark.session import (  # noqa: E402
+    get_spark,
+    release_pins,
+    scoped_conf,
+)
+from hebrew_tutor_data_pipeline_spark.streaming.sources import (  # noqa: E402
+    ROCKSDB_PROVIDER,
+)
 
 
 def sf_of(sf_dir: str) -> float:
@@ -243,49 +250,39 @@ def main() -> int:
 
         # warm the same backend the catalog streams run on (RocksDB
         # native lib load + first store open) at a tiny partition count
-        _prev_provider = spark.conf.get(
-            "spark.sql.streaming.stateStore.providerClass", None
-        )
-        _prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set(
-            "spark.sql.streaming.stateStore.providerClass",
-            "org.apache.spark.sql.execution.streaming.state."
-            "RocksDBStateStoreProvider",
-        )
-        spark.conf.set("spark.sql.shuffle.partitions", "4")
-        wq2 = (
-            spark.readStream.schema("id long")
-            .parquet(f"{warm_dir}/in")
-            .groupBy("id")
-            .applyInPandasWithState(
-                _warm_state,
-                "k long",
-                "s long",
-                "append",
-                GroupStateTimeout.NoTimeout,
-            )
-            .writeStream.outputMode("append")
-            # a real (1-row) parquet write: the catalog's foreachBatch
-            # sinks write parquet, and the session's FIRST parquet write
-            # pays committer/codec init that noop never touches
-            .foreachBatch(
-                lambda df, bid: df.write.mode("overwrite").parquet(
-                    f"{warm_dir}/sink"
+        with scoped_conf(
+            spark,
+            **{
+                "spark.sql.streaming.stateStore.providerClass": ROCKSDB_PROVIDER,
+                "spark.sql.shuffle.partitions": "4",
+            },
+        ):
+            wq2 = (
+                spark.readStream.schema("id long")
+                .parquet(f"{warm_dir}/in")
+                .groupBy("id")
+                .applyInPandasWithState(
+                    _warm_state,
+                    "k long",
+                    "s long",
+                    "append",
+                    GroupStateTimeout.NoTimeout,
                 )
+                .writeStream.outputMode("append")
+                # a real (1-row) parquet write: the catalog's foreachBatch
+                # sinks write parquet, and the session's FIRST parquet write
+                # pays committer/codec init that noop never touches
+                .foreachBatch(
+                    lambda df, bid: df.write.mode("overwrite").parquet(
+                        f"{warm_dir}/sink"
+                    )
+                )
+                .option("checkpointLocation", f"{warm_dir}/ckpt2")
+                .trigger(availableNow=True)
+                .start()
             )
-            .option("checkpointLocation", f"{warm_dir}/ckpt2")
-            .trigger(availableNow=True)
-            .start()
-        )
-        wq2.awaitTermination(120)
-        wq2.stop()
-        spark.conf.set("spark.sql.shuffle.partitions", _prev_parts)
-        if _prev_provider is None:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        else:
-            spark.conf.set(
-                "spark.sql.streaming.stateStore.providerClass", _prev_provider
-            )
+            wq2.awaitTermination(120)
+            wq2.stop()
         shutil.rmtree(warm_dir, ignore_errors=True)
     except Exception as exc:  # noqa: BLE001 — warmup must never kill the run
         print(f"# warmup stream skip: {exc}", file=sys.stderr)
@@ -347,6 +344,8 @@ def main() -> int:
         except Exception as exc:  # noqa: BLE001 — isolate, record, continue
             errors[name] = f"{type(exc).__name__}: {exc}"[:500]
             print(f"# {name}: ERROR {errors[name].splitlines()[0]}", file=sys.stderr)
+        finally:
+            release_pins()
 
     total = round(sum(timings.values()), 3)
     out = {

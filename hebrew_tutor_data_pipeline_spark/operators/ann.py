@@ -592,10 +592,11 @@ def two_level_codebook(
     # kmeans_codebook's cached input is)
     assigned = cell_assign(corpus, id_col, vec_col, coarse).persist()
     # Unpersist the cached blocking and any live per-iteration
-    # broadcast even when a Lloyd step fails (ADVICE r12):
-    # _CODEBOOK_CACHE consumers retry within one process, so an
-    # error path that leaked them would pin executor memory for
-    # the session lifetime.
+    # broadcast even when a Lloyd step fails (ADVICE r12): a failed
+    # build leaves nothing in the shared-result store, so the next
+    # consumer in the same session trains again, and an error path
+    # that leaked them would pin executor memory for the session
+    # lifetime.
     bc = None
     try:
 

@@ -35,6 +35,7 @@ from pyspark.sql import functions as F
 
 from ..functions.generate import explode_nonempty
 from ..functions.text import whitespace_token_count, whitespace_tokens, word_ngrams
+from ..session import pin
 
 # Same constants as functions.text.doc_fingerprint — shared so oracle SQL
 # strings can inline them.
@@ -401,7 +402,6 @@ def minhash_lsh_pairs(
     num_hashes: int = 32,
     bands: int = 8,
     threshold: float = 0.5,
-    materialize: str | bool | None = None,
 ) -> DataFrame:
     """Near-duplicate pairs via MinHash banding + exact Jaccard verify.
 
@@ -426,8 +426,8 @@ def minhash_lsh_pairs(
     x100 wall 70→51.6 s (hashed-join rework, zero spill,
     bench_runs/r10_scaling_minhash_rework.json; 53.2 s on the r11
     re-probe). The r10 eager-cache attempt (persist + count) was
-    MEASURED WRONG-TRADE and retired in r11 — see the materialize
-    comment below for the three-variant adjudication
+    MEASURED WRONG-TRADE and retired in r11 — see the comment on
+    the hashed shingle arrays below for the three-variant adjudication
     (r11_minhash_materialize.json).
     An explode-into-probe-rows + min_by/max_by
     regroup variant was MEASURED WORSE (133 s / 26 GB spill at x100 —
@@ -467,14 +467,7 @@ def minhash_lsh_pairs(
     # corpus-sized frames; on a real cluster with real stats those
     # joins go SMJ and the scale cost center is the array verify — the
     # banding join (narrow (id, band, bucket) rows) is safe at any
-    # scale. materialize stays as a probe knob; None = False.
-    if materialize is None:
-        materialize = False
-    if materialize == "persist" or materialize is True:
-        hashed = hashed.persist()
-        hashed.count()
-    elif materialize == "reuse":
-        hashed = hashed.repartition(F.col("id"))
+    # scale.
     sigs = hashed.select("id", _sig_over_hashes(F.col("th"), num_hashes).alias("sig"))
     banded = sigs.select(
         "id", F.explode(_banded_sig_structs(rows_per_band, bands)).alias("bb")
@@ -492,25 +485,9 @@ def minhash_lsh_pairs(
         .distinct()
     )
 
-    verify = hashed
-    if materialize == "reuse":
-        # Candidate-id SEMI-PRUNE of the verify side — bounds the array
-        # payload downstream to ∝ near-dup candidates instead of corpus
-        # (the honest-scale shape). Measured ONLY in combination with
-        # the repartition materialization (r11_minhash_materialize.json
-        # "reuse": 194 s / 18.9 GB spill at x100): once real sizes
-        # exist the planner SMJs every join and the prune's own joins
-        # compound the loss, so the combination is a rejected probe
-        # arm, kept measurable behind the same knob.
-        cand_ids = (
-            candidates.select(F.col("id_a").alias("id"))
-            .unionByName(candidates.select(F.col("id_b").alias("id")))
-            .distinct()
-        )
-        verify = hashed.join(cand_ids, "id", "left_semi")
     both = candidates.join(
-        verify.withColumnsRenamed({"id": "id_a", "th": "th_a"}), "id_a"
-    ).join(verify.withColumnsRenamed({"id": "id_b", "th": "th_b"}), "id_b")
+        hashed.withColumnsRenamed({"id": "id_a", "th": "th_a"}), "id_a"
+    ).join(hashed.withColumnsRenamed({"id": "id_b", "th": "th_b"}), "id_b")
     return (
         both.withColumn("_inter", F.size(F.array_intersect("th_a", "th_b")))
         .withColumn(
@@ -1509,8 +1486,7 @@ def minhash_lookup_pairs(
         # join + one semi-join per shingle side) — lazy, AQE's
         # concurrent stage materialization would re-run the banding
         # join per consumer.
-        cand = cand.persist()
-        cand.count()
+        pin(cand)
         sh_b = shingle_sets(
             batch.join(
                 cand.select(F.col("b_id").alias(id_col)), id_col, "leftsemi"

@@ -1282,12 +1282,14 @@ def event_conversion_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     # times, and each branch re-executed the whole funnel tree (u3 ⊃ u2
     # ⊃ u1 — 25 jobs for a 3-row answer; 9 with the single reference).
     # Same rows, types, and order (step 1, 2, 3 from one generator).
+    # A zero denominator (no users at the previous step) gives NULL
+    # conv_ppm, as the oracle's `//` does, instead of an ANSI error.
     return c.select(
         F.expr(
             "stack(3,"
-            " 1, 'view',                (c1 * 1000000) div c0, c1,"
-            " 2, 'view>click',          (c2 * 1000000) div c1, c2,"
-            " 3, 'view>click>purchase', (c3 * 1000000) div c2, c3"
+            " 1, 'view',                (c1 * 1000000) div nullif(c0, 0), c1,"
+            " 2, 'view>click',          (c2 * 1000000) div nullif(c1, 0), c2,"
+            " 3, 'view>click>purchase', (c3 * 1000000) div nullif(c2, 0), c3"
             ") AS (step, step_name, conv_ppm, n_users)"
         )
     ).select("step", "step_name", "n_users", "conv_ppm")

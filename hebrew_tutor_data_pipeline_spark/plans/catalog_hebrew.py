@@ -20,6 +20,7 @@ from pyspark.sql import functions as F
 from ..functions import similarity
 from ..operators import alignment, intervals
 from ..sources.readers import read_nested_json_corpus
+from ..session import pin
 from .catalog import CATALOG, T, _register
 from .catalog_ml import (
     HASH_BASE,
@@ -1208,8 +1209,7 @@ def trimmer_intro_analysis(spark: SparkSession, sf_dir: str) -> DataFrame:
         p.stat().st_size for p in Path(FIXTURE_AUDIO_TREE).glob("**/*.mp3")
     )
     if tree_bytes >= 32 << 20:
-        segs = segs.persist()
-        segs.count()  # pin: concurrent AQE stages race a lazy boundary
+        pin(segs)  # concurrent AQE stages race a lazy boundary
     thr = audio_ops.intro_threshold(segs, skip_segments=2, factor=0.3)
     sugg = audio_ops.suggest_intro_trim(
         segs, skip_segments=2, factor=0.3, buffer_seconds=0.25, min_trim=1.0

@@ -19,6 +19,8 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
+from ..session import scoped_conf
+
 #: Schema of the synthetic `events` table as a stream (file sources
 #: require an explicit schema — no runtime inference on unbounded input).
 EVENTS_STREAM_SCHEMA = StructType(
@@ -249,26 +251,21 @@ def run_available_now_to_parquet(
         def _write_batch(batch_df: DataFrame, batch_id: int) -> None:
             batch_df.write.mode("overwrite").parquet(f"{out}/batch_id={batch_id}")
 
+    # Session conf is cloned into the query at start(), so both keys are
+    # restored right after it without touching the running stream.
+    conf = {}
     if state_store_provider:
-        # session conf is captured per-query at start — affects only
-        # streams started after this point, never a running query
-        spark.conf.set(
-            "spark.sql.streaming.stateStore.providerClass", state_store_provider
-        )
-    restore_parts: str | None = None
+        conf["spark.sql.streaming.stateStore.providerClass"] = state_store_provider
     if input_rows is not None:
         # size state partitions to the bounded input (state_partitions_for
-        # rationale above); the conf is cloned into the query at start(),
-        # so restoring right after never touches the running stream. Each
-        # run gets a FRESH checkpoint (scratch cleared above), so the
-        # partition count frozen into the checkpoint can never conflict
-        # with a later run's choice.
+        # rationale above). Each run gets a FRESH checkpoint (scratch
+        # cleared above), so the partition count frozen into the
+        # checkpoint can never conflict with a later run's choice.
         default = int(spark.conf.get("spark.sql.shuffle.partitions"))
         parts = state_partitions_for(input_rows, default)
         if parts != default:
-            restore_parts = str(default)
-            spark.conf.set("spark.sql.shuffle.partitions", str(parts))
-    try:
+            conf["spark.sql.shuffle.partitions"] = str(parts)
+    with scoped_conf(spark, **conf):
         q = (
             df.writeStream.outputMode(output_mode)
             .queryName(query_name)
@@ -277,9 +274,6 @@ def run_available_now_to_parquet(
             .trigger(availableNow=True)
             .start()
         )
-    finally:
-        if restore_parts is not None:
-            spark.conf.set("spark.sql.shuffle.partitions", restore_parts)
     try:
         if self_terminates:
             if not q.awaitTermination(timeout_seconds):

@@ -457,6 +457,29 @@ def test_curation_funnel_monotone(spark):
             assert r["tokens_sampled"] == 0
 
 
+def test_funnel_zero_row_input_matches_oracle(spark, tmp_path):
+    """event_conversion_funnel on a zero-row copy of every table: each
+    conversion share divides by zero, which both engines report as NULL
+    (DuckDB's `//`), not as an ANSI error."""
+    import pyarrow.parquet as pq
+
+    con = duckdb.connect()
+    for t in TABLES:
+        pq.write_table(
+            pq.read_table(f"{SF}/{t}.parquet").slice(0, 0), tmp_path / f"{t}.parquet"
+        )
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{tmp_path}/{t}.parquet'")
+    spec = CATALOG["event_conversion_funnel"]
+    sdf = spec.spark(spark, str(tmp_path))
+    srows = [tuple(r) for r in sdf.collect()]
+    cur = con.execute(spec.oracle)
+    ocols = [d[0] for d in cur.description]
+    orows = cur.fetchall()
+    ppm = sdf.columns.index("conv_ppm")
+    assert [r[ppm] for r in srows] == [None, None, None]
+    assert table_hash(srows, sdf.columns) == table_hash(orows, ocols)
+
+
 class TestReportValueReferences:
     """Pure-Python VALUE references for the session's numeric report
     entries — oracle parity alone is blind to semantics both engines

@@ -2457,27 +2457,53 @@ class TestExplodeNonempty:
                 assert "array_distinct" not in ls, ls
 
 
+def _stored_values(spark, sf_dir: str, table: str) -> dict:
+    """The shared-result store's values for one input table."""
+    import os
+
+    from hebrew_tutor_data_pipeline_spark import session
+
+    key = (spark.sparkContext.applicationId, os.path.join(sf_dir, f"{table}.parquet"))
+    return session._SHARED[key]["values"]
+
+
+def _fill_store_with_fakes(spark, tmp_path, name: str) -> list:
+    """Fill the shared-result store with four fake input tables, oldest
+    first, each holding one persisted frame under ``name``; returns the
+    frames."""
+    from hebrew_tutor_data_pipeline_spark import session
+
+    session.clear_shared()
+    frames = []
+    for i in range(4):
+        f = spark.createDataFrame([(i, i)], "doc_id long, component_id long").persist()
+        f.count()
+        frames.append(f)
+        session.shared(spark, str(tmp_path / f"dir{i}"), "documents", name, lambda f=f: f)
+    return frames
+
+
 class TestDedupClusterMemo:
-    """The shared SimHash-clustering memo behind dedup_clusters /
+    """The shared SimHash clustering behind dedup_clusters /
     dedup_cluster_stats (catalog_ml._dedup_cluster_labels): one
-    connected-components run serves both entries, keyed per
-    (application, sf_dir) with FIFO eviction — the _BLOOM_SHARED
-    discipline applied to the #3/#5 catalog entries by sf0.1 cost."""
+    connected-components run serves both entries through the
+    shared-result store."""
 
     SF_SMOKE = "/root/testdata/sf0.001"
 
     def test_stats_consistent_with_clusters_and_memo_shared(self, spark):
+        from hebrew_tutor_data_pipeline_spark import session
         from hebrew_tutor_data_pipeline_spark.plans import catalog_ml as ml
 
-        ml.clear_dedup_cluster_cache()
+        session.clear_shared()
         clusters = ml.dedup_clusters(spark, self.SF_SMOKE).collect()
-        assert len(ml._DEDUP_LAB_SHARED) == 1
+        lab = _stored_values(spark, self.SF_SMOKE, "documents")["cluster_labels"]
         stats = {
             r["cluster_size"]: (r["n_clusters"], r["n_docs"], r["n_dup_docs"])
             for r in ml.dedup_cluster_stats(spark, self.SF_SMOKE).collect()
         }
-        # the second entry rode the memo — no new key
-        assert len(ml._DEDUP_LAB_SHARED) == 1
+        # the second entry rode the store — the same labeling, no rebuild
+        assert ml._dedup_cluster_labels(spark, self.SF_SMOKE) is lab
         # independent recomputation of the size distribution from the
         # parent entry's own output
         from collections import Counter
@@ -2492,69 +2518,68 @@ class TestDedupClusterMemo:
                 (size - 1) * n_clusters,
             )
         assert stats == expect
-        ml.clear_dedup_cluster_cache()
-        assert len(ml._DEDUP_LAB_SHARED) == 0
+        session.clear_shared()
+        assert not session._SHARED
+        assert not lab.storageLevel.useMemory
 
-    def test_memo_fifo_eviction_unpersists_oldest(self, spark):
+    def test_memo_fifo_eviction_unpersists_oldest(self, spark, tmp_path):
+        from hebrew_tutor_data_pipeline_spark import session
         from hebrew_tutor_data_pipeline_spark.plans import catalog_ml as ml
 
-        ml.clear_dedup_cluster_cache()
-        dummies = []
-        for i in range(4):
-            f = spark.createDataFrame(
-                [(i, i)], "doc_id long, component_id long"
-            ).persist()
-            f.count()
-            dummies.append(f)
-            ml._DEDUP_LAB_SHARED[("fake-app", f"dir{i}")] = f
+        dummies = _fill_store_with_fakes(spark, tmp_path, "cluster_labels")
         ml._dedup_cluster_labels(spark, self.SF_SMOKE)
-        # one real key + at most 3 survivors; the OLDEST fake evicted
-        # and unpersisted, newest fakes still present
-        assert ("fake-app", "dir0") not in ml._DEDUP_LAB_SHARED
+        # the real input + the 3 newest fakes; the OLDEST fake evicted
+        # and unpersisted, the newer fakes still present and cached
+        live = {path for _, path in session._SHARED}
+        assert str(tmp_path / "dir0" / "documents.parquet") not in live
         assert dummies[0].storageLevel.useMemory is False
-        assert len(ml._DEDUP_LAB_SHARED) <= 4
-        ml.clear_dedup_cluster_cache()
+        for i in (1, 2, 3):
+            assert str(tmp_path / f"dir{i}" / "documents.parquet") in live
+            assert dummies[i].storageLevel.useMemory
+        assert len(session._SHARED) == 4
+        session.clear_shared()
+
 
 class TestBpeMergeMemo:
-    """The shared BPE merge-table memo behind bpe_merge_rounds /
+    """The shared BPE merge table behind bpe_merge_rounds /
     bpe_encode_corpus / bpe_vocab_coverage (catalog_ml._bpe_merge_table):
     the three entries train the identical 3-round table, so one training
-    (three corpus-wide pair counts) serves all of them, keyed per
-    (application, sf_dir) with FIFO eviction — the _BLOOM_SHARED
-    discipline applied to a driver-side model artifact."""
+    (three corpus-wide pair counts) serves all of them through the
+    shared-result store."""
 
     SF_SMOKE = "/root/testdata/sf0.001"
 
     def test_memo_matches_fresh_training_and_is_shared(self, spark):
+        from hebrew_tutor_data_pipeline_spark import session
         from hebrew_tutor_data_pipeline_spark.operators import bpe
         from hebrew_tutor_data_pipeline_spark.plans import catalog_ml as ml
         from hebrew_tutor_data_pipeline_spark.plans.catalog import T
         from hebrew_tutor_data_pipeline_spark.sources.readers import spread
 
-        ml.clear_bpe_merge_cache()
+        session.clear_shared()
         memo_rows = sorted(
             map(tuple, ml.bpe_merge_rounds(spark, self.SF_SMOKE).collect())
         )
-        assert len(ml._BPE_MERGES_SHARED) == 1
-        # the encode entry rides the same memo — no new key, no retrain
+        merges = _stored_values(spark, self.SF_SMOKE, "documents")["bpe_merges"]
+        # the encode entry rides the same stored table — no retrain
         ml.bpe_encode_corpus(spark, self.SF_SMOKE)
-        assert len(ml._BPE_MERGES_SHARED) == 1
-        # value check against an INDEPENDENT (memo-free) training
+        assert ml._bpe_merge_table(spark, self.SF_SMOKE) is merges
+        # value check against an INDEPENDENT (store-free) training
         d = spread(T(spark, self.SF_SMOKE, "documents"))
         fresh = sorted(
             map(tuple, bpe.bpe_merges(d, "doc_id", "text", rounds=3).collect())
         )
         assert memo_rows == fresh
-        ml.clear_bpe_merge_cache()
-        assert len(ml._BPE_MERGES_SHARED) == 0
+        session.clear_shared()
+        assert not session._SHARED
 
-    def test_memo_fifo_eviction(self, spark):
+    def test_memo_fifo_eviction(self, spark, tmp_path):
+        from hebrew_tutor_data_pipeline_spark import session
         from hebrew_tutor_data_pipeline_spark.plans import catalog_ml as ml
 
-        ml.clear_bpe_merge_cache()
-        for i in range(4):
-            ml._BPE_MERGES_SHARED[("fake-app", f"dir{i}")] = []
+        _fill_store_with_fakes(spark, tmp_path, "bpe_merges")
         ml._bpe_merge_table(spark, self.SF_SMOKE)
-        assert ("fake-app", "dir0") not in ml._BPE_MERGES_SHARED
-        assert len(ml._BPE_MERGES_SHARED) <= 4
-        ml.clear_bpe_merge_cache()
+        live = {path for _, path in session._SHARED}
+        assert str(tmp_path / "dir0" / "documents.parquet") not in live
+        assert len(session._SHARED) == 4
+        session.clear_shared()

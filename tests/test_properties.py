@@ -1979,9 +1979,10 @@ class TestLineDedupProperties:
 
 class TestBloomSharedBuild:
     def test_memo_shares_and_survives_unpersist(self, spark):
-        """The Bloom pair's shared build (VERDICT r10 #7): the memo
-        returns the SAME persisted frames for both entries within one
-        application+sf_dir, and an external unpersist (scale_bench
+        """The Bloom pair's shared build (VERDICT r10 #7): the
+        shared-result store returns the SAME persisted frames for both
+        entries within one application and input table, and an external
+        unpersist (scale_bench
         hygiene) degrades to recompute — results stay identical,
         because lineage is intact."""
         from hebrew_tutor_data_pipeline_spark.plans import catalog_ml as cm
@@ -2002,40 +2003,34 @@ class TestBloomSharedBuild:
         )
         assert before == after and len(before) > 0
 
-    def test_memo_evicts_oldest_not_newest(self, spark, monkeypatch):
-        """Bounded-memo eviction must be FIFO (ADVICE r11): the old
-        dict.popitem() removed the MOST recently inserted entry, so once
-        4 keys accumulated the three oldest persisted frames were never
-        evictable and stayed pinned for the application lifetime."""
+    def test_memo_evicts_oldest_not_newest(self, spark, tmp_path):
+        """Bounded-store eviction must be FIFO (ADVICE r11): a popitem()
+        removes the MOST recently inserted entry, so once 4 inputs
+        accumulated the three oldest persisted frames would never be
+        evictable and stay pinned for the application lifetime."""
+        from hebrew_tutor_data_pipeline_spark import session
         from hebrew_tutor_data_pipeline_spark.plans import catalog_ml as cm
 
-        class _Fake:
-            def __init__(self):
-                self.unpersisted = False
-
-            def unpersist(self):
-                self.unpersisted = True
-
-        fakes = {f"sf_fake_{i}": {"idx": _Fake(), "bits": _Fake()} for i in range(4)}
-        monkeypatch.setattr(
-            cm,
-            "_BLOOM_SHARED",
-            {
-                (spark.sparkContext.applicationId, k): dict(v)
-                for k, v in fakes.items()
-            },
-        )
+        session.clear_shared()
+        fakes = {}
+        for i in range(4):
+            parts = {"idx": spark.range(i + 1).persist(), "bits": spark.range(i + 2).persist()}
+            fakes[i] = parts
+            session.shared(
+                spark, str(tmp_path / f"sf_fake_{i}"), "documents", "bloom", lambda p=parts: p
+            )
         cm._bloom_parts(spark, "/root/testdata/sf0.001")
-        live = {k[1] for k in cm._BLOOM_SHARED}
-        assert "/root/testdata/sf0.001" in live
-        # FIFO: the single evicted key is the OLDEST fake, and its
+        live = {path for _, path in session._SHARED}
+        assert "/root/testdata/sf0.001/documents.parquet" in live
+        # FIFO: the single evicted input is the OLDEST fake, and its
         # frames were unpersisted; the newer three survive untouched
-        assert "sf_fake_0" not in live
-        assert fakes["sf_fake_0"]["idx"].unpersisted
-        assert fakes["sf_fake_0"]["bits"].unpersisted
+        assert str(tmp_path / "sf_fake_0" / "documents.parquet") not in live
+        assert not fakes[0]["idx"].is_cached
+        assert not fakes[0]["bits"].is_cached
         for i in (1, 2, 3):
-            assert f"sf_fake_{i}" in live
-            assert not fakes[f"sf_fake_{i}"]["idx"].unpersisted
+            assert str(tmp_path / f"sf_fake_{i}" / "documents.parquet") in live
+            assert fakes[i]["idx"].is_cached and fakes[i]["bits"].is_cached
+        session.clear_shared()
 
 
 class TestBloomMembershipProperties:

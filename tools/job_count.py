@@ -28,7 +28,7 @@ SF_DIR = "/root/testdata/sf0.1"
 
 def main() -> int:
     from hebrew_tutor_data_pipeline_spark.plans import CATALOG
-    from hebrew_tutor_data_pipeline_spark.session import get_spark
+    from hebrew_tutor_data_pipeline_spark.session import get_spark, release_pins
 
     names = sys.argv[1:]
     out_json = None
@@ -57,6 +57,8 @@ def main() -> int:
             out[name] = {"error": f"{type(exc).__name__}: {exc}"[:200]}
             print(f"{name}: ERROR {out[name]['error'][:80]}")
             continue
+        finally:
+            release_pins()
         dt = time.perf_counter() - t0
         sc.setJobGroup(None, None)
         jobs = tracker.getJobIdsForGroup(group)

@@ -225,7 +225,7 @@ def main() -> int:
 
     import bench
     from hebrew_tutor_data_pipeline_spark.plans import CATALOG
-    from hebrew_tutor_data_pipeline_spark.session import get_spark
+    from hebrew_tutor_data_pipeline_spark.session import get_spark, release_pins
 
     sf = bench.sf_of(sf_dir)
     spark = get_spark("parity")
@@ -257,10 +257,16 @@ def main() -> int:
             sdf = spec.spark(spark, sf_dir)
             scols = sdf.columns
             n_spark = sdf.count()
+            # values only for answers under the cap; the rowcount tier
+            # below checks the count and schema
+            if n_spark <= row_cap:
+                srows = [tuple(r) for r in sdf.collect()]
         except Exception as e:
             failures.append(name)
             print(f"FAIL  {name}: spark error: {str(e)[:300]}")
             continue
+        finally:
+            release_pins()
         if n_spark > row_cap:
             # rowcount-only tier: values for this answer are pinned at
             # the SFs where it fits under the cap
@@ -317,12 +323,6 @@ def main() -> int:
                     f"(answer > PARITY_ROW_CAP={row_cap}; values pinned at "
                     f"lower SFs) ({time.time()-t0:.1f}s)"
                 )
-            continue
-        try:
-            srows = [tuple(r) for r in sdf.collect()]
-        except Exception as e:
-            failures.append(name)
-            print(f"FAIL  {name}: spark error: {str(e)[:300]}")
             continue
         if spec.oracle is None:
             print(

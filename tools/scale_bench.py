@@ -201,16 +201,14 @@ def main() -> int:
             if leaked:
                 print(f"# {label} {name}: cleared {leaked} persisted RDDs", file=sys.stderr)
             # each query pays its FULL model cost (codebook training
-            # included): without this, whichever _embeddings_codebook*
-            # consumer runs first absorbs training and the rest measure
-            # assignment only — the isolated numbers here are the
-            # cost-model evidence, unlike bench.py's in-catalog totals
-            # where the memo sharing is the deliberate production posture
-            from hebrew_tutor_data_pipeline_spark.plans.catalog_ml import (
-                clear_codebook_cache,
-            )
+            # included): without this, whichever codebook consumer runs
+            # first absorbs training and the rest measure assignment
+            # only — the isolated numbers here are the cost-model
+            # evidence, unlike bench.py's in-catalog totals where the
+            # shared-result store is the deliberate production posture
+            from hebrew_tutor_data_pipeline_spark.session import clear_shared
 
-            clear_codebook_cache()
+            clear_shared()
             rec: dict = {"sec": sec}
             if err:
                 rec["error"] = err

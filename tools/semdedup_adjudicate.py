@@ -1,12 +1,12 @@
 """Adjudicate the BENCH_r12 semantic_dedup_flags 2.31 → 6.00 s sf0.1
 flag (VERDICT r12 #2 / What's-wrong #2) by MEASUREMENT: split the
 entry's in-catalog cost into two-level codebook TRAINING vs everything
-else (assignment + within-cell pairwise + flags), using the process
-codebook memo as the knife.
+else (assignment + within-cell pairwise + flags), using the shared-result
+store that holds the codebook as the knife.
 
 Protocol (solo — nothing else may run on the host):
   for each of N rounds:
-    fresh Spark work, cleared codebook cache  → time entry COLD
+    fresh Spark work, cleared shared store    → time entry COLD
     same process, memo now warm               → time entry WARM
   cold − warm ≈ coarse+fine Lloyd training; warm ≈ the flat-era cost
   floor (the flat k=20 model was near-free to train at 5k docs, so the
@@ -33,10 +33,7 @@ def main() -> int:
     rounds = int(sys.argv[2]) if len(sys.argv) > 2 else 3
 
     from hebrew_tutor_data_pipeline_spark.plans import CATALOG
-    from hebrew_tutor_data_pipeline_spark.plans.catalog_ml import (
-        clear_codebook_cache,
-    )
-    from hebrew_tutor_data_pipeline_spark.session import get_spark
+    from hebrew_tutor_data_pipeline_spark.session import clear_shared, get_spark
 
     spark = get_spark("semdedup-adjudicate")
     spec = CATALOG["semantic_dedup_flags"]
@@ -48,12 +45,12 @@ def main() -> int:
 
     # one unmeasured warmup so JVM/codegen/python-worker spin-up does
     # not land inside the first cold number (the r06 attribution class)
-    clear_codebook_cache()
+    clear_shared()
     run_once()
 
     cold, warm = [], []
     for _ in range(rounds):
-        clear_codebook_cache()
+        clear_shared()
         cold.append(run_once())
         warm.append(run_once())
 
